@@ -2,6 +2,7 @@ package graft.job
 
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 
 /**
  * Round-8 optimization harness (guide §1): per-query timing with more
@@ -59,7 +60,7 @@ object BenchExtra {
                 df.write.format("noop").mode("overwrite").save()
               else df.count()
               true
-            } catch { case e: Throwable =>
+            } catch { case NonFatal(e) =>
               System.err.println(s"$name failed: ${e.getClass.getSimpleName}: ${e.getMessage}")
               false
             }
@@ -78,6 +79,11 @@ object BenchExtra {
         println(f"TOTAL(best) ${total}%.2f s over ${names.size} queries [$mode]")
 
       case "plans" =>
+        if (args.length < 3) {
+          System.err.println("usage: BenchExtra plans <outDir> <suffix> [q1,q2,...|all]")
+          spark.stop()
+          sys.exit(2)
+        }
         val outDir = args(1)
         val suffix = args(2)
         val names = queryNames(if (args.length > 3) args(3) else "all")

@@ -241,6 +241,30 @@ object CurateJob {
     }
   }
 
+  /**
+   * Stage 4's heuristic gates: scan → ONE TextStats kernel pass per row →
+   * gate → (url, warc_ts, text, quality, lang). Keeps quality ≥
+   * minQuality and, for docs with ≥ 2 tokens (shorter ones carry no
+   * repetition stats and pass), dup_3gram_frac ≤ maxDup3Gram and
+   * top_2gram_frac ≤ maxTop2Gram. The gate is a typed filter
+   * (TextOps.filterOnce) so the kernel is never re-evaluated inside a
+   * pushed-down predicate; no join, no shuffle, no checkpoint
+   * (PlanShapeSpec pins the plan).
+   */
+  private[graft] def qualityGate(docs: DataFrame, th: Thresholds): DataFrame = {
+    val scored = docs.withColumn("__s", TextOps.textStats(col("text")))
+      .withColumn("quality", col("__s.quality"))
+      .withColumn("lang", col("__s.lang"))
+      .withColumn("dup_3gram_frac", col("__s.dup_3gram_frac"))
+      .withColumn("top_2gram_frac", col("__s.top_2gram_frac"))
+      .drop("__s")
+    TextOps.filterOnce[QualityGate](scored) { g =>
+      g.quality.exists(_ >= th.minQuality) &&
+        g.dup_3gram_frac.forall(_ <= th.maxDup3Gram) &&
+        g.top_2gram_frac.forall(_ <= th.maxTop2Gram)
+    }.drop("dup_3gram_frac", "top_2gram_frac")
+  }
+
   /** Runs the full pipeline; returns the funnel JSON (also written to
     * `<out>/_funnel.json`). */
   def run(spark: SparkSession, pagesDir: String, outDir: String,
@@ -347,17 +371,7 @@ object CurateJob {
     // the stage output (`quality_model_prob`) so operators can audit
     // model drops the way they audit decontamination drops.
     val (qualityKeep, nQuality) = stage(spark, s"$outDir/stage_quality", resume) {
-      val rep = TextOps.repetitionStats(strippedKeep, "url", "text")
-        .select(col("id").as("url"), col("dup_3gram_frac"), col("top_2gram_frac"))
-      val base = strippedKeep.drop("stripped_tokens")
-        .withColumn("quality", TextOps.qualityScore(col("text")))
-        .withColumn("lang", TextOps.langId(col("text")))
-        .join(rep, Seq("url"), "left") // single-token docs carry no stats
-        .where(
-          col("quality") >= th.minQuality &&
-            coalesce(col("dup_3gram_frac") <= th.maxDup3Gram, lit(true)) &&
-            coalesce(col("top_2gram_frac") <= th.maxTop2Gram, lit(true)))
-        .drop("dup_3gram_frac", "top_2gram_frac")
+      val base = qualityGate(strippedKeep.drop("stripped_tokens"), th)
       qualityModelPath match {
         case None => base
         case Some(p) =>
@@ -550,3 +564,8 @@ object CurateJob {
     funnel
   }
 }
+
+/** The columns stage 4's heuristic gate reads (CurateJob.qualityGate). */
+private[graft] final case class QualityGate(quality: Option[Double],
+                                            dup_3gram_frac: Option[Double],
+                                            top_2gram_frac: Option[Double])

@@ -34,15 +34,6 @@ object Dedup {
   /** Lowercase whitespace tokens. */
   def tokens(text: Column): Column = split(lower(trim(text)), s"[$WsClass]+")
 
-  /** Word n-gram shingles (n=3): sliding windows via sequence+transform. */
-  def shingles(text: Column, n: Int = 3): Column = {
-    val t = tokens(text)
-    when(size(t) >= n,
-      transform(sequence(lit(1), size(t) - (n - 1)),
-        i => concat_ws(" ", slice(t, i, lit(n)))))
-      .otherwise(array(concat_ws(" ", t)))
-  }
-
   /** Shingle-hash algorithms: xxhash64 (production default) and the
     * DuckDB-replicable md5-60bit used by oracled paths. */
   val AlgoXx64 = "xx64"
@@ -57,7 +48,8 @@ object Dedup {
 
   /** Distinct shingle hashes — native codegen kernel (one compiled pass),
     * bit-identical to array_distinct(transform(shingles(text, n), hash))
-    * (KernelParitySpec). */
+    * (KernelParitySpec; the higher-order reference lives in test sources,
+    * ColumnReference). */
   def shingleHashes(text: Column, n: Int = 3, algo: String = AlgoXx64): Column =
     graft.plans.VectorKernels.shingleHash(text, n, algoIsMd5(algo))
 
@@ -109,12 +101,6 @@ object Dedup {
     * `('0x' || substring(md5(x),1,15))::UBIGINT`. */
   def md5Hash60(s: Column): Column =
     conv(substring(md5(s), 1, 15), 16, 10).cast("long")
-
-  /** The interpreted higher-order formulation of shingleHashes — kept as
-    * the independent reference the kernel is pinned against
-    * (KernelParitySpec); NOT for hot paths. */
-  def shingleHashesHof(text: Column, hashFn: Column => Column, n: Int = 3): Column =
-    array_distinct(transform(shingles(text, n), hashFn))
 
   // ---- exact ----------------------------------------------------------
 
@@ -1010,9 +996,15 @@ object Dedup {
    * d²; a corpus-wide boilerplate gram is by definition FREQUENT, so
    * it ranks LAST in the rarest-first order and sits in almost no
    * doc's prefix — p ≈ 0 exactly where d explodes (pinned by the
-   * planted hot-gram test in PipelineOpsSpec). floor (not ceil) errs
-   * only toward a LONGER prefix under float rounding (the q53
-   * convention); extra candidates are absorbed by the exact verify.
+   * planted hot-gram test in PipelineOpsSpec). The verify keeps
+   * round(containment, 4) ≥ c, i.e. every pair whose EXACT containment is
+   * ≥ c − 5e-5 (HALF_UP), so the prefix lemma is applied at that lower
+   * threshold minus q53's 1e-9 float slack — at c itself, a pair of
+   * ≥ 20k-span docs whose exact containment lies in [c − 5e-5, c) would
+   * be kept by the verify (and the oracle) yet never become a candidate
+   * (pinned in SubstringDedupSpec). floor (not ceil) errs only toward a
+   * LONGER prefix under float rounding (the q53 convention); extra
+   * candidates are absorbed by the exact verify.
    *
    * Verify: candidates (ids only, deduplicated) re-join the span
    * postings by id — |A∩B| via one (id, h) equi-join, sizes by id —
@@ -1051,12 +1043,14 @@ object Dedup {
 
   /** The containment-prefix candidate generator (see spanContainmentJoin
     * scaladoc for the lemma): (id_a, id_b) distinct, id_a < id_b, from
-    * each doc's rarest ⌊(1−c)·m⌋+1 spans joined against the FULL
-    * postings. private[graft] so the spec can pin the candidate-count
-    * collapse on a planted hot-gram corpus directly. */
+    * each doc's rarest m − ⌊c'·m⌋ + 1 spans joined against the FULL
+    * postings, with c' = c − 5e-5 − 1e-9 the lowest exact containment the
+    * rounded verify admits. private[graft] so the spec can pin the
+    * candidate-count collapse on a planted hot-gram corpus directly. */
   private[graft] def containmentCandidates(spans: DataFrame, sizes: DataFrame,
                                            minContainment: Double): DataFrame = {
     import org.apache.spark.sql.expressions.Window
+    val admitted = minContainment - 5e-5 - 1e-9
     // span df as ONE window over the h partitioning instead of a
     // groupBy + join-back (guide §2.4; r8)
     val prefix = spans
@@ -1065,7 +1059,7 @@ object Dedup {
         Window.partitionBy(col("id")).orderBy(col("hdf").asc, col("h").asc)))
       .join(sizes, Seq("id"))
       .where(col("rk") <=
-        col("nspans") - floor(lit(minContainment) * col("nspans")) + 1)
+        col("nspans") - floor(lit(admitted) * col("nspans")) + 1)
       .select(col("h"), col("id"))
     // prefix × full postings, both orientations in one symmetric join;
     // candidates carry ids only

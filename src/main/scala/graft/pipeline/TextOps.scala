@@ -7,9 +7,11 @@ import org.apache.spark.sql.functions._
  * Text-analysis operators for a large-scale training-data pipeline, all as
  * Catalyst Column expressions (whole-stage-codegen'd, no UDFs): whitespace
  * normalization, token counting, heuristic language ID, quality scoring,
- * document fingerprinting. Mirrors of the per-document scalar helpers the
- * extraction engine uses (breadability/utils.py, scoring.py) lifted to
- * column level so they run at scan throughput.
+ * repetition statistics, document fingerprinting. Mirrors of the
+ * per-document scalar helpers the extraction engine uses
+ * (breadability/utils.py, scoring.py) lifted to column level so they run
+ * at scan throughput; the quality-stage numbers come from one native
+ * kernel (textStats).
  */
 object TextOps {
 
@@ -319,108 +321,66 @@ object TextOps {
   }
 
   /**
+   * Every per-document number of the quality stage from ONE native kernel
+   * pass (plans/VectorKernels.textStats — no regex, no token array): a
+   * struct of quality, lang, n_words, dup_word_frac, dup_3gram_frac,
+   * top_2gram_frac. Project it once and read its fields; the three
+   * operators below are thin projections of it, bit-identical to the
+   * Column formulations they replaced (TextStatsParitySpec).
+   */
+  def textStats(text: Column): Column = graft.plans.VectorKernels.textStats(text)
+
+  /**
    * Within-document REPETITION statistics — the Gopher-style repetition
    * filter signals (duplicate-word fraction, duplicate-3-gram fraction,
    * most-frequent-2-gram coverage) a quality pipeline thresholds on to
    * drop degenerate/looping text; the complement of qualityScore's
-   * length/punctuation band. Fully relational (posexplode + one per-doc
-   * window + bounded groupBys — no interpreted array lambdas): the
-   * distinct-3-gram count reuses the ShingleHash kernel (distinct hashes
-   * ≡ distinct grams at 64-bit collision odds — same acceptance class as
-   * the dedup oracles). Documents with a single token have no 2-grams
-   * and drop out (both engines agree; q51 pins it cross-engine).
+   * length/punctuation band. Tokens are split(lower(trim(text)), ws+);
+   * the distinct-3-gram count is ShingleHash's (distinct hashes ≡
+   * distinct grams at 64-bit collision odds — same acceptance class as
+   * the dedup oracles). Documents with fewer than 2 tokens have no 2-grams
+   * and drop out (both engines agree; q51 pins it cross-engine). Output
+   * (id, dup_word_frac, dup_3gram_frac, top_2gram_frac).
    */
-  def repetitionStats(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val toks = df.select(col(idCol).as("id"),
-      posexplode(Dedup.tokens(col(textCol)))).toDF("id", "pos", "tok")
-    val w = Window.partitionBy(col("id")).orderBy(col("pos"))
-    // materialized ONCE: the word-stats and 2-gram aggregations are two
-    // separate consumers — unmaterialized, the tokenize + posexplode +
-    // lead window ran twice (r8 single-evaluation discipline)
-    val grams = Mat.corpus(toks.withColumn("nxt", lead(col("tok"), 1).over(w)))
-    val words = grams.groupBy(col("id")).agg(
-      count(lit(1)).as("n_words"),
-      countDistinct(col("tok")).as("d_words"))
-    val twoG = grams.where(col("nxt").isNotNull)
-      .groupBy(col("id"), col("tok"), col("nxt")).agg(count(lit(1)).as("c"))
-      .groupBy(col("id")).agg(sum(col("c")).as("n_2g"), max(col("c")).as("top_2g"))
-    val threeG = df.select(col(idCol).as("id"),
-      size(Dedup.shingleHashes(col(textCol), 3)).as("d_3g"))
-    words.join(twoG, Seq("id")).join(threeG, Seq("id"))
-      .select(col("id"),
-        round(lit(1.0) - col("d_words").cast("double") / col("n_words"), 4)
-          .as("dup_word_frac"),
-        round(when(col("n_words") >= 3,
-          lit(1.0) - col("d_3g").cast("double") / (col("n_words") - 2))
-          .otherwise(0.0), 4).as("dup_3gram_frac"),
-        round(col("top_2g").cast("double") / col("n_2g"), 4)
-          .as("top_2gram_frac"))
-  }
+  def repetitionStats(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    filterOnce[RepetitionGate](
+      df.select(col(idCol).as("id"), textStats(col(textCol)).as("s"))
+        .select(col("id"), col("s.n_words").as("n_words"),
+          col("s.dup_word_frac").as("dup_word_frac"),
+          col("s.dup_3gram_frac").as("dup_3gram_frac"),
+          col("s.top_2gram_frac").as("top_2gram_frac")))(_.n_words.isDefined)
+      .drop("n_words")
+
+  /**
+   * Keep the rows of `df` whose columns, read as `T` (a case class naming
+   * a subset of them), satisfy `keep`. A TYPED filter on purpose: its
+   * lambda is opaque to PushDownPredicates, so a condition over a kernel
+   * column is evaluated on the projected value. An untyped `where` on the
+   * same column is pushed below the projection with the alias substituted
+   * back, and the kernel then runs twice per row (the Catalyst
+   * filter-duplication trap). Only T's columns are deserialized.
+   */
+  private[graft] def filterOnce[T <: Product : scala.reflect.runtime.universe.TypeTag](
+      df: DataFrame)(keep: T => Boolean): DataFrame =
+    df.as[T](org.apache.spark.sql.Encoders.product[T]).filter(keep).toDF()
 
   /**
    * Heuristic language ID via stopword hit ratios (n-gram-free variant —
-   * the synthetic corpus is space-tokenized). Scores a small stopword set
-   * per language and takes the argmax; "und" when nothing matches.
+   * the synthetic corpus is space-tokenized), after a script pre-pass
+   * (kana → ja, then a quarter of the non-space characters in Hangul →
+   * ko, Han → zh, Cyrillic → ru). Scores a small stopword set per language
+   * and takes the argmax (ties: en, de, fr, es); "und" when nothing
+   * matches. A projection of textStats.
    */
-  def langId(text: Column): Column = {
-    val norm = normalizeWs(text)
-    // script pre-pass (the standard first stage of real lang-id): count
-    // characters per unicode script; CJK/Cyrillic text never matches the
-    // Latin stopword lists, so it must be decided here. Fractions over
-    // non-space characters; thresholds: any meaningful kana → ja,
-    // otherwise a quarter of the text in one script wins.
-    val nospace = regexp_replace(norm, s"[${Dedup.WsClass}]", "")
-    val total = length(nospace).cast("double")
-    def scriptCount(re: String): Column =
-      total - length(regexp_replace(nospace, re, "")).cast("double")
-    val kana = scriptCount("[\\p{IsHiragana}\\p{IsKatakana}]")
-    val hangul = scriptCount("[\\p{IsHangul}]")
-    val han = scriptCount("[\\p{IsHan}]")
-    val cyr = scriptCount("[\\p{IsCyrillic}]")
-
-    val padded = concat(lit(" "), lower(norm), lit(" "))
-    def hits(words: Seq[String]): Column =
-      words.map(w => size(split(padded, s"[${Dedup.WsClass}]$w[${Dedup.WsClass}]")) - 1)
-        .reduce(_ + _)
-    val en = hits(Seq("the", "and", "of", "a", "to", "is"))
-    val de = hits(Seq("der", "die", "und", "das", "ist", "ein"))
-    val fr = hits(Seq("le", "la", "et", "les", "des", "est"))
-    val es = hits(Seq("el", "de", "y", "que", "los", "una"))
-    val best = greatest(en, de, fr, es)
-    when(total <= 0, lit("und"))
-      .when(kana / total > 0.05, lit("ja"))
-      .when(hangul / total > 0.25, lit("ko"))
-      .when(han / total > 0.25, lit("zh"))
-      .when(cyr / total > 0.25, lit("ru"))
-      .when(best <= 0, lit("und"))
-      .when(en === best, lit("en"))
-      .when(de === best, lit("de"))
-      .when(fr === best, lit("fr"))
-      .otherwise(lit("es"))
-  }
+  def langId(text: Column): Column = textStats(text).getField("lang")
 
   /**
    * Quality score in [0,1] from length/punctuation/stopword ratios — the
    * standard web-text quality gate shape (length band + sentence-final
-   * punctuation + function-word presence − symbol noise).
+   * punctuation + function-word presence − symbol noise), rounded to 4.
+   * A projection of textStats.
    */
-  def qualityScore(text: Column): Column = {
-    val norm = normalizeWs(text)
-    val len = length(norm).cast("double")
-    val words = tokenCount(norm).cast("double")
-    val meanWordLen = when(words > 0, len / words).otherwise(lit(0.0))
-    val punct = length(regexp_replace(norm, "[^.!?]", "")).cast("double")
-    val symbols = length(regexp_replace(norm, s"[\\p{L}\\p{N}${Dedup.WsClass}.,;:!?'\"()-]", "")).cast("double")
-    val stopHits = (size(split(concat(lit(" "), lower(norm), lit(" ")), s"[${Dedup.WsClass}](the|and|of|a|to|is)[${Dedup.WsClass}]")) - 1).cast("double")
-    val lengthBand = when(len >= 200 && len <= 20000, 1.0)
-      .when(len >= 50, 0.5).otherwise(0.0)
-    val wordShape = when(meanWordLen >= 3 && meanWordLen <= 12, 1.0).otherwise(0.3)
-    val punctRate = least(punct / greatest(words, lit(1.0)) * 10.0, lit(1.0))
-    val stopRate = least(stopHits / greatest(words, lit(1.0)) * 5.0, lit(1.0))
-    val noise = least(symbols / greatest(len, lit(1.0)) * 20.0, lit(1.0))
-    round((lengthBand * 0.3 + wordShape * 0.2 + punctRate * 0.2 + stopRate * 0.3) * (lit(1.0) - noise * 0.5), 4)
-  }
+  def qualityScore(text: Column): Column = textStats(text).getField("quality")
 
   /** Document fingerprint: md5 of whitespace-normalized lowercase text —
     * the exact-dedup key (stable across engines). */
@@ -457,3 +417,6 @@ object TextOps {
       .otherwise(concat(scheme, lit("://"), host, path, q))
   }
 }
+
+/** The column repetitionStats gates on (see TextOps.filterOnce). */
+private[graft] final case class RepetitionGate(n_words: Option[Long])

@@ -120,7 +120,7 @@ class KernelParitySpec extends AnyFunSuite {
         if (md5) Dedup.md5Hash60 else (c => xxhash64(c))
       assertAllEqual(df.select(
         VectorKernels.shingleHash(col("text"), n, md5).as("kernel"),
-        Dedup.shingleHashesHof(col("text"), hashFn, n).as("hof")))
+        ColumnReference.shingleHashesHof(col("text"), hashFn, n).as("hof")))
     }
   }
 

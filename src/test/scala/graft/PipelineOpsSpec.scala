@@ -877,7 +877,7 @@ class PipelineOpsSpec extends AnyFunSuite {
       == "a\u000Bb c")
     // the kernel splits with the same class as the HOF path
     val k = df.select(Dedup.shingleHashes(col("text"), n = 3)).head.getSeq[Long](0)
-    val h = df.select(Dedup.shingleHashesHof(col("text"),
+    val h = df.select(ColumnReference.shingleHashesHof(col("text"),
       c => xxhash64(c), n = 3)).head.getSeq[Long](0)
     assert(k == h)
   }

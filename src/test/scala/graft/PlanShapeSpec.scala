@@ -115,6 +115,44 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(!p.contains("CartesianProduct"))
   }
 
+  test("CurateJob's quality stage evaluates the TextStats kernel once per " +
+    "row, right under the gate: no exchange, no broadcast, no checkpoint") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("stage_near").toString
+    val prose = (0 until 80).map(i => s"t$i").grouped(8)
+      .map(_.mkString(" ") + ".").mkString(" the ")
+    Seq(("u1", new java.sql.Timestamp(0L), prose),
+      ("u2", new java.sql.Timestamp(0L), "loop " * 50), ("u3", null, "x"))
+      .toDF("url", "warc_ts", "text")
+      .write.mode("overwrite").parquet(dir)
+    val gated = graft.job.CurateJob.qualityGate(spark.read.parquet(dir),
+      graft.job.CurateJob.Thresholds())
+    assert(gated.columns.toSeq == Seq("url", "warc_ts", "text", "quality", "lang"))
+    assert(gated.select("url").as[String].collect().toSeq == Seq("u1"))
+    val p = finalPlan(gated)
+    val lines = p.linesIterator.toSeq
+    val kernel = lines.indexWhere(_.contains("graft_text_stats"))
+    assert(lines.count(_.contains("graft_text_stats")) == 1, p)
+    // the gate is the operator directly above the kernel's projection
+    assert(kernel > 0 && lines.take(kernel).reverse.find(_.contains("Filter"))
+      .exists(f => lines.indexOf(f) >= kernel - 2), p)
+    assert(!p.contains("Exchange") && !p.contains("BroadcastExchange"), p)
+    assert(!p.contains("ExistingRDD") && !p.contains("LogicalRDD"), p)
+    // the same single evaluation for q51's repetitionStats
+    val rep = graft.pipeline.TextOps.repetitionStats(spark.read.parquet(dir), "url", "text")
+    rep.collect()
+    val pr = finalPlan(rep)
+    assert(pr.linesIterator.count(_.contains("graft_text_stats")) == 1, pr)
+  }
+
+  /** The executed plan after execution, without AQE's initial-plan copy. */
+  private def finalPlan(df: org.apache.spark.sql.DataFrame): String =
+    df.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        a.executedPlan.toString
+      case other => other.toString
+    }
+
   test("extraction stage plan is map-only after one salted shuffle") {
     import spark.implicits._
     val rows = graft.job.FixtureGen.fixtureRows("src/test/resources/fixtures")

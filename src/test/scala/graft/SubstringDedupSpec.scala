@@ -231,6 +231,26 @@ class SubstringDedupSpec extends AnyFunSuite {
     assert(out == Seq((900L, 901L, 1.0)))
   }
 
+  test("spanContainmentJoin keeps a >= 20k-span pair whose EXACT " +
+    "containment lies in [c - 5e-5, c): the rounded verify admits it, so " +
+    "the prefix filter must generate it") {
+    // A: 30,007 unique tokens → 30,000 distinct 8-gram spans. B: A's
+    // first 15,006 tokens (14,999 shared spans) + 20,000 unique tokens →
+    // 34,999 spans. Containment 14999 / 30000 = 0.49997 < 0.5 rounds to
+    // 0.5. The unshared spans (df 1) rank before the shared ones (df 2);
+    // at c = 0.5 A's prefix (15,001) and B's (17,501) hold only
+    // unshared spans — the pair was never a candidate.
+    val a = (0 until 30007).map(j => s"a$j")
+    val b = a.take(15006) ++ (0 until 20000).map(j => s"b$j")
+    val df = docsDf(Seq((1L, a.mkString(" ")), (2L, b.mkString(" "))))
+    val out = Dedup.spanContainmentJoin(df, "doc_id", "text",
+      n = 8, minContainment = 0.5).collect()
+      .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"),
+        r.getAs[Long]("shared_spans"), r.getAs[Double]("containment"))).toSeq
+    assert(14999.0 / 30000 < 0.5)
+    assert(out == Seq((1L, 2L, 14999L, 0.5)))
+  }
+
   test("stripDupSpans removes exactly the covered tokens, keeps the " +
     "rest in order; a fully-duplicated doc strips to empty") {
     val df = docsDf(Seq(
